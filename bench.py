@@ -45,6 +45,19 @@ def log(*a):
     print(*a, file=sys.stderr, flush=True)
 
 
+def driver_memory() -> str:
+    """JVM heap for a local session: half of physical RAM, at most 48g.
+
+    In local mode the driver JVM is also the executor; the other half is
+    left to its Python workers and the OS, so the heap cannot grow past RAM.
+    """
+    with open("/proc/meminfo") as f:
+        for line in f:
+            if line.startswith("MemTotal:"):
+                return f"{min(48 << 10, int(line.split()[1]) // 2048)}m"
+    raise RuntimeError("MemTotal missing from /proc/meminfo")
+
+
 def make_session(cores: int):
     from pyspark.sql import SparkSession
     return (SparkSession.builder.master(f"local[{cores}]")
@@ -52,7 +65,7 @@ def make_session(cores: int):
             .config("spark.sql.shuffle.partitions", str(max(8, cores)))
             .config("spark.sql.adaptive.enabled", "true")
             .config("spark.ui.enabled", "false")
-            .config("spark.driver.memory", "48g")
+            .config("spark.driver.memory", driver_memory())
             # small Arrow batches keep numpy temporaries allocator-resident:
             # this sandbox's page-fault throughput saturates under parallel
             # first-touch of large fresh allocations

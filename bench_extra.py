@@ -22,6 +22,8 @@ import time
 REPO = os.path.dirname(os.path.abspath(__file__))
 sys.path.insert(0, REPO)
 
+from bench import driver_memory  # noqa: E402
+
 
 def make_session(cores: int):
     from pyspark.sql import SparkSession
@@ -30,7 +32,7 @@ def make_session(cores: int):
             .config("spark.sql.shuffle.partitions", str(max(8, cores)))
             .config("spark.sql.adaptive.enabled", "true")
             .config("spark.ui.enabled", "false")
-            .config("spark.driver.memory", "48g")
+            .config("spark.driver.memory", driver_memory())
             .config("spark.sql.execution.arrow.maxRecordsPerBatch", "2048")
             .config("spark.sql.session.timeZone", "UTC")
             .getOrCreate())

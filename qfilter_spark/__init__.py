@@ -6,6 +6,7 @@ Reference semantics: arthurprs/qfilter (/root/reference, read-only).
 Architecture: SURVEY.md. This is a from-scratch Spark-first design, not a port.
 """
 
+from . import _pyworker
 from .errors import (
     CapacityExceeded,
     CapacityTooLarge,
@@ -25,3 +26,6 @@ __all__ = [
 ]
 
 __version__ = "0.1.0"
+
+# every library UDF imports this package when it is unpickled on a worker
+_pyworker.install()

@@ -356,7 +356,9 @@ def decode(payload: bytes, qbits: int, rbits: int, n_items: int) -> np.ndarray:
     # ascending order — no sort
     m1 = int(counts[:occ_pos.size - so].sum())
     fps = np.concatenate([fps[m1:], fps[:m1]])
-    assert fps.size == n_items, f"decoded {fps.size} fingerprints, header says {n_items}"
+    if fps.size != n_items:  # a raise, not an assert: -O strips asserts
+        raise ValueError(f"decoded {fps.size} fingerprints, header says "
+                         f"{n_items} (corrupt payload or header)")
     return fps
 
 

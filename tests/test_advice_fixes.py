@@ -189,6 +189,14 @@ def test_lsh_params_for_degenerate_threshold():
         ann.lsh_params_for(10**6, -0.999)
     # and the usual auto geometry is unchanged by the log1p rewrite
     assert ann.lsh_params_for(10**6, 0.95) == (22, 10)
+    # ADVICE r6: min_recall >= 1 raised a bare math domain error from
+    # log(1 - min_recall); min_recall must lie in (0, 1), checked up front
+    for bad in (1.0, 1.5, 0.0, -0.1, float("nan")):
+        for kw in ({}, {"n_tables": 16}):
+            with pytest.raises(ValueError, match="min_recall"):
+                ann.lsh_params_for(10**6, 0.95, min_recall=bad, **kw)
+        with pytest.raises(ValueError, match="min_recall"):
+            ann.lsh_params_for(10**6, 1.0, min_recall=bad)
 
 
 def test_grouped_values_n_items_excludes_nulls(spark):

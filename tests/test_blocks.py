@@ -67,6 +67,31 @@ def test_roundtrip_empty():
     assert out.size == 0
 
 
+def test_decode_refuses_zero_header_over_occupied_buckets():
+    fps = make_fps(np.random.default_rng(3), 6, 7, 10)
+    with pytest.raises(ValueError, match="header says 0"):
+        blocks.decode(blocks.encode(fps, 6, 7), 6, 7, 0)
+
+
+def test_decode_refuses_payload_without_empty_anchor_slot():
+    qbits, rbits = 6, 7
+    n_slots = 1 << qbits
+    view = np.frombuffer(bytearray(blocks.encode(
+        np.empty(0, dtype=np.uint64), qbits, rbits)), dtype=np.uint8) \
+        .reshape(n_slots // 64, 17 + 8 * rbits)
+    view[:, 1:17] = 0xFF  # every slot occupied and ending its own run
+    with pytest.raises(ValueError, match="no empty anchor slot"):
+        blocks.decode(view.tobytes(), qbits, rbits, n_slots)
+
+
+@pytest.mark.parametrize("delta", [-1, 1])
+def test_decode_refuses_count_mismatch(delta):
+    fps = make_fps(np.random.default_rng(4), 7, 6, 40)
+    payload = blocks.encode(fps, 7, 6)
+    with pytest.raises(ValueError, match="decoded 40 fingerprints"):
+        blocks.decode(payload, 7, 6, fps.size + delta)
+
+
 def test_roundtrip_with_duplicates():
     rng = np.random.default_rng(7)
     base = make_fps(rng, 7, 6, 40)
