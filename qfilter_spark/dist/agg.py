@@ -1,7 +1,7 @@
 """Partial/final sketch aggregation over Spark DataFrames.
 
 This hand-rolls Spark's own partial -> final typed-aggregate split
-(SURVEY.md §4.2) with pandas/Arrow UDFs, because the state lives in numpy:
+(SURVEY.md §4.2) with Arrow UDFs, because the state lives in numpy:
 
 1. **Partial build** — ``mapInArrow`` over the input partitions; each task
    folds its Arrow batches into one local sketch with vectorized numpy
@@ -10,7 +10,7 @@ This hand-rolls Spark's own partial -> final typed-aggregate split
    in this stage: the scan's partitioning is reused as-is, so at 100 TB the
    stage is embarrassingly parallel and bounded by scan throughput.
 
-2. **Tree merge** — iterative ``groupBy(shard % fan_in).applyInPandas``
+2. **Tree merge** — iterative ``groupBy(shard % fan_in).applyInArrow``
    rounds until one sketch remains (the reference's merge,
    src/lib.rs:1343-1352, applied as a k-way reduction). Fan-in keeps every
    reducer's input at <= fan_in small blobs, so no single reducer becomes a
@@ -63,7 +63,7 @@ class SketchSpec:
         """Arrow RecordBatch -> update array (uint64 hashes or float64)."""
         arr = batch.column(self.col)
         if self.mode == "hash_col":
-            return u64_hashes_from_arrow(arr, f"sketch build ({self.col!r})")
+            return u64_hashes_from_arrow(arr, f"column {self.col!r}")
         if self.mode == "tokens_ngram":
             flat, offsets = flat_from_arrow(arr)
             return ngram_hashes(flat, offsets, self.ngram_n)
@@ -128,27 +128,36 @@ def partial_sketches(df, spec: SketchSpec):
     return pruned.mapInArrow(build, PARTIAL_SCHEMA)
 
 
-def _merge_group_fn(spec_unused=None):
-    import pandas as pd
+def _merge_blobs(tbl, order_col: str):
+    """Merge a group's sketch blobs in ``order_col`` order; returns
+    (merged sketch, summed n_items, summed build_secs)."""
+    tbl = tbl.sort_by(order_col)
+    acc = None
+    for payload in tbl.column("payload").to_pylist():
+        sk = sketches.loads(payload)
+        if acc is None:
+            acc = sk
+        else:
+            acc.merge(sk)
+    return (acc, int(np.sum(tbl.column("n_items").to_numpy())),
+            float(np.sum(tbl.column("build_secs").to_numpy())))
 
-    def merge_group(key, pdf: "pd.DataFrame") -> "pd.DataFrame":
+
+def _merge_group_fn(spec_unused=None):
+    import pyarrow as pa
+
+    # no type hints: see build_grouped_sketches.build_salted
+    def merge_group(key, tbl):
         t0 = time.perf_counter()
         # shard_id is the ORIGINAL id (the group key travels in "grp"), so
         # this sort gives a deterministic merge order for the weakly
         # order-dependent quantile sketches, run-to-run
-        pdf = pdf.sort_values("shard_id")
-        acc = None
-        for payload in pdf["payload"]:
-            sk = sketches.loads(bytes(payload))
-            if acc is None:
-                acc = sk
-            else:
-                acc.merge(sk)
-        return pd.DataFrame({
-            "shard_id": [int(key[0])],
-            "n_items": [int(pdf["n_items"].sum())],
-            "build_secs": [float(pdf["build_secs"].sum()) + (time.perf_counter() - t0)],
-            "payload": [acc.to_bytes()],
+        acc, n_items, secs = _merge_blobs(tbl, "shard_id")
+        return pa.table({
+            "shard_id": pa.array([key[0].as_py()], pa.int64()),
+            "n_items": pa.array([n_items], pa.int64()),
+            "build_secs": pa.array([secs + (time.perf_counter() - t0)], pa.float64()),
+            "payload": pa.array([acc.to_bytes()], pa.binary()),
         })
 
     return merge_group
@@ -186,7 +195,7 @@ def tree_merge(partials, fan_in: int = 16, lineage=None, n_partials: int | None 
         current = (current
                    .withColumn("grp", F.pmod(F.col("shard_id"), F.lit(n_groups)))
                    .groupBy("grp")
-                   .applyInPandas(merge_fn, PARTIAL_SCHEMA))
+                   .applyInArrow(merge_fn, PARTIAL_SCHEMA))
         if lineage is not None:
             current = lineage.write_round(current, rnd)
         n = n_groups
@@ -219,7 +228,6 @@ def build_grouped_sketches(df, group_col: str, spec: SketchSpec,
     round 2 merges the salts away. Returns a DataFrame
     (group_col, n_items, build_secs, payload).
     """
-    import pandas as pd
     import pyarrow as pa
     from pyspark.sql import functions as F
 
@@ -262,17 +270,14 @@ def build_grouped_sketches(df, group_col: str, spec: SketchSpec,
             "payload": pa.array([sk.to_bytes()], pa.binary()),
         })
 
-    def merge_salts(key, pdf: "pd.DataFrame") -> "pd.DataFrame":
+    def merge_salts(key, tbl):
         t0 = time.perf_counter()
-        pdf = pdf.sort_values("salt")
-        acc = None
-        for payload in pdf["payload"]:
-            sk = sketches.loads(bytes(payload))
-            acc = sk if acc is None else (acc.merge(sk) or acc)
-        return pd.DataFrame({
-            group_col: [key[0]], "n_items": [int(pdf["n_items"].sum())],
-            "build_secs": [float(pdf["build_secs"].sum()) + (time.perf_counter() - t0)],
-            "payload": [acc.to_bytes()],
+        acc, n_items, secs = _merge_blobs(tbl, "salt")
+        return pa.table({
+            group_col: pa.array([key[0].as_py()], pa.string()),
+            "n_items": pa.array([n_items], pa.int64()),
+            "build_secs": pa.array([secs + (time.perf_counter() - t0)], pa.float64()),
+            "payload": pa.array([acc.to_bytes()], pa.binary()),
         })
 
     salted = (df
@@ -280,4 +285,4 @@ def build_grouped_sketches(df, group_col: str, spec: SketchSpec,
               .withColumn("salt", F.pmod(F.spark_partition_id(), F.lit(n_salts)))
               .groupBy(group_col, "salt")
               .applyInArrow(build_salted, salted_schema))
-    return salted.groupBy(group_col).applyInPandas(merge_salts, out_schema)
+    return salted.groupBy(group_col).applyInArrow(merge_salts, out_schema)

@@ -9,20 +9,21 @@ quotient (src/lib.rs:1304-1309), so splitting the fingerprint domain into
 the single big filter — same answers, bit-for-bit (tested against the
 single-blob path).
 
-Build: one ``mapInArrow`` pass emits per-(partition, shard) sorted
-fingerprint chunks; one ``groupBy(shard).applyInPandas`` round merges each
-shard (k-way timsort of sorted runs). The filter then LIVES as a Parquet
-table (shard, n_fps, payload) — the checkpointed lineage IS the data.
+One layout: every sharded filter is a table (key, shard, n_fps, payload)
+routed by a :class:`ShardDirectory` (``key`` = row index). The uniform
+table is its identity case (``starts[i] = i << (fs-k)``, ``key == shard``);
+hot-prefix splitting only adds row starts inside a shard.
 
-Probe: probes are shuffled once by the same shard function and co-grouped
-with the filter table (``cogroup.applyInPandas``) — a co-partitioned join;
-each task touches exactly one shard's state. No broadcast, no driver blob,
-no single reducer, at any scale.
+Build: one ``mapInArrow`` pass emits per-(partition, row) sorted
+fingerprint chunks; one ``groupBy(key).applyInArrow`` round merges each
+row (k-way timsort of sorted runs). The filter then LIVES as a Parquet
+table — the checkpointed lineage IS the data. Probe/insert/remove run the
+same chunk emitter and co-group with the table by ``key`` — a
+co-partitioned join; each task touches exactly one row's state. No
+broadcast, no driver blob, no single reducer, at any scale.
 """
 
 from __future__ import annotations
-
-import time
 
 import numpy as np
 
@@ -31,7 +32,7 @@ from ..hashing import u64_hashes_from_arrow
 from ..rsqf import Filter
 from .agg import SketchSpec
 
-SHARDED_SCHEMA = "shard int, n_fps long, payload binary"
+SHARDED_SCHEMA = "key int, shard int, n_fps long, payload binary"
 
 _FMT_RAW64 = 0
 _FMT_REL32 = 1
@@ -88,12 +89,6 @@ def _local_mask(fs: int, k: int) -> np.uint64:
     return np.uint64((1 << (fs - k)) - 1)
 
 
-# a NULL hash routes to a NULL shard (_route_by_shard's JVM expressions
-# propagate NULL) and reaches the group kernels, which refuse it via the
-# shared helper instead of laundering it through float NaN
-_u64_from_arrow = u64_hashes_from_arrow
-
-
 def _fp_meta(spec: SketchSpec) -> tuple[int, int, int]:
     """(qbits, rbits, fingerprint_size) of the spec's filter params."""
     f = spec.make().filter
@@ -101,325 +96,37 @@ def _fp_meta(spec: SketchSpec) -> tuple[int, int, int]:
 
 
 def shard_bits_for(n_shards: int) -> int:
+    """k such that ``n_shards == 2**k``; refuses any other shard count."""
     k = int(n_shards).bit_length() - 1
-    assert (1 << k) == n_shards, "n_shards must be a power of two"
+    if n_shards < 1 or (1 << k) != n_shards:
+        raise ValueError(
+            f"n_shards must be a positive power of two, got {n_shards!r}")
     return k
 
 
-def build_sharded_filter(df, spec: SketchSpec, n_shards: int = 64,
-                         max_buffer: int = 16_000_000):
-    """Returns a DataFrame (shard, n_fps, payload): the distributed filter.
-
-    ``payload`` is a canonical sorted-fingerprint Filter blob restricted to
-    the shard's fingerprint range [shard << (fs-k), (shard+1) << (fs-k)).
-    Write it to Parquet to persist; union of shards == the single filter.
-
-    Spill-aware: a task's fingerprint buffer is capped at ``max_buffer``
-    entries (~128 MB); larger input partitions emit multiple sorted chunk
-    waves, which the shard merge treats as extra sorted runs — per-task
-    memory stays bounded no matter the input partition size (SURVEY.md §7
-    "Python-side memory" risk item).
-    """
-    k = shard_bits_for(n_shards)
-    qbits, rbits, fs = _fp_meta(spec)
-    assert k <= qbits, "shard prefix must fit in the quotient"
-
-    # the same spill-aware chunk emitter the split build and incremental
-    # insert use (one copy of the flush/boundary logic)
-    chunks_df = _emit_chunk_rows(df, spec, n_shards, fs, max_buffer,
-                                 with_samples=False)
-
-    import pandas as pd
-
-    keep = getattr(spec.make(), "keep_duplicates", True)
-
-    def merge_shard(key, pdf: "pd.DataFrame") -> "pd.DataFrame":
-        shard = int(key[0])
-        runs = [_unpack_chunk(p, shard, fs - k) for p in pdf["payload"]]
-        fps = np.concatenate(runs) if runs else np.empty(0, dtype=np.uint64)
-        fps.sort(kind="stable")  # timsort: adaptive on concatenated sorted runs
-        if not keep:
-            fps = np.unique(fps)
-        blob = _shard_blob(fps, shard, qbits - k, rbits, keep)
-        return pd.DataFrame({"shard": [int(key[0])], "n_fps": [int(fps.size)],
-                             "payload": [blob]})
-
-    return chunks_df.groupBy("shard").applyInPandas(merge_shard, SHARDED_SCHEMA)
-
-
-def _route_by_shard(df, hash_col: str, fs: int, k: int):
-    """(h, shard) projection: the JVM-side fingerprint-prefix shard router,
-    shared by probe/count/remove so all three stay in lockstep with the
-    build's shard function. Guards the JVM's shift-mod-64: at k=0 with a
-    64-bit fingerprint, ``h >>> 64`` would return h, not 0."""
-    from pyspark.sql import functions as F
-
-    shard = (F.lit(0) if fs - k >= 64 else F.shiftrightunsigned(
-        F.col(hash_col).bitwiseAND(F.lit((1 << fs) - 1 if fs < 64 else -1)),
-        fs - k))
-    return df.select(F.col(hash_col).alias("h"),
-                     shard.cast("int").alias("shard"))
-
-
-def probe_sharded(probe_df, hash_col: str, filter_df, n_shards: int,
-                  spec: SketchSpec):
-    """Membership/count stats per shard via a co-partitioned group join.
-
-    Returns a DataFrame (shard, n_probed, n_contained) — aggregate per
-    shard; sum for global counts. Probes travel through one shuffle keyed
-    by the same fingerprint-prefix shard function as the build.
-    """
-    import pyarrow as pa
-    from pyspark.sql import functions as F
-
-    k = shard_bits_for(n_shards)
-    _, _, fs = _fp_meta(spec)
-
-    probes = _route_by_shard(probe_df, hash_col, fs, k)
-
-    def probe_group(key, probes_tbl: "pa.Table", filt_tbl: "pa.Table") -> "pa.Table":
-        n = probes_tbl.num_rows
-        if n == 0:
-            return pa.table({"shard": pa.array([], pa.int32()),
-                             "n_probed": pa.array([], pa.int64()),
-                             "n_contained": pa.array([], pa.int64())})
-        # extract BEFORE the empty-shard shortcut: a NULL probe hash routes
-        # to the NULL shard, whose filter side is always empty — skipping
-        # extraction there would silently count NULLs as clean misses
-        h = _u64_from_arrow(probes_tbl.column("h"), "probe_sharded")
-        if filt_tbl.num_rows == 0:
-            hit = 0
-        else:
-            sk = sketches.loads(filt_tbl.column("payload")[0].as_py())
-            hit = int(sk.contains_hashes(h & _local_mask(fs, k)).sum())
-        return pa.table({"shard": pa.array([key[0].as_py()], pa.int32()),
-                         "n_probed": pa.array([n], pa.int64()),
-                         "n_contained": pa.array([hit], pa.int64())})
-
-    return (probes.groupBy("shard")
-            .cogroup(filter_df.groupBy("shard"))
-            .applyInArrow(probe_group, "shard int, n_probed long, n_contained long"))
-
-
-def count_sharded(probe_df, hash_col: str, filter_df, n_shards: int,
-                  spec: SketchSpec):
-    """Per-key COUNT estimates through the sharded layout (reference
-    counting semantics src/lib.rs:1008-1018 applied at table scale).
-
-    Each probe row routes to its fingerprint-prefix shard — the same
-    single co-partitioned shuffle as :func:`probe_sharded` — and receives
-    the shard-local ``count_hashes`` estimate. Returns (h, est) keyed by
-    the probe hash; join back on ``h`` downstream. Counting multiplicity
-    lives entirely inside one shard (a fingerprint's copies share its
-    prefix), so sharded counts are exactly the single-filter counts.
-    """
-    import pyarrow as pa
-    from pyspark.sql import functions as F
-
-    k = shard_bits_for(n_shards)
-    _, _, fs = _fp_meta(spec)
-
-    probes = _route_by_shard(probe_df, hash_col, fs, k)
-
-    def count_group(key, probes_tbl: "pa.Table", filt_tbl: "pa.Table") -> "pa.Table":
-        n = probes_tbl.num_rows
-        if n == 0:
-            return pa.table({"h": pa.array([], pa.int64()),
-                             "est": pa.array([], pa.int64())})
-        # NULL refusal before the empty-shard shortcut, like probe/remove
-        h_u64 = _u64_from_arrow(probes_tbl.column("h"), "count_sharded")
-        h_raw = h_u64.view(np.int64)
-        if filt_tbl.num_rows == 0:
-            est = np.zeros(n, dtype=np.int64)
-        else:
-            sk = sketches.loads(filt_tbl.column("payload")[0].as_py())
-            est = np.asarray(
-                sk.count_hashes(h_u64 & _local_mask(fs, k)),
-                dtype=np.int64)
-        return pa.table({"h": pa.array(h_raw, pa.int64()),
-                         "est": pa.array(est, pa.int64())})
-
-    return (probes.groupBy("shard")
-            .cogroup(filter_df.groupBy("shard"))
-            .applyInArrow(count_group, "h long, est long"))
-
-
-def _probe_chunks_against(filt_tbl, qs: list, fs: int, k: int) -> tuple[int, int]:
-    """(n_probed, n_contained) of sorted probe chunks vs a (possibly
-    absent) filter row — the ONE sorted-chunk probe kernel shared by the
-    unsplit and split probe paths.
-
-    table.size guard: a shard drained to empty by remove_sharded still has
-    a row, and min(lo, -1) would index into nothing.
-    """
-    n = sum(int(q.size) for q in qs)
-    hit = 0
-    if filt_tbl.num_rows:
-        sk = sketches.loads(filt_tbl.column("payload")[0].as_py())
-        table = sk.filter._fps
-        lm = _local_mask(fs, k)
-        for q in qs if table.size else ():  # chunks sorted: locality-optimal
-            q = q & lm  # shard-local coordinates (stays sorted)
-            lo = np.searchsorted(table, q, side="left")
-            hit += int(((lo < table.size)
-                        & (table[np.minimum(lo, table.size - 1)] == q)).sum())
-    return n, hit
-
-
-def probe_sharded_chunks(df, spec_in: SketchSpec, filter_df, n_shards: int,
-                         spec: SketchSpec, max_buffer: int = 16_000_000):
-    """Like :func:`probe_sharded` but shuffles sorted per-shard hash CHUNKS
-    instead of individual probe rows.
-
-    The probe side runs the same extract kernel as the build, sorts its
-    partition's hashes once, splits them at the shard boundaries, and ships
-    one binary blob per (partition, shard) — a few thousand rows of vector
-    payloads instead of billions of scalar rows. Each shard task then probes
-    sorted-queries-against-sorted-table, the cache-optimal case. At 100 TB
-    this turns the probe shuffle from O(rows) record overhead into O(bytes).
-    Per-task probe buffers flush every ``max_buffer`` hashes (same bounded
-    discipline as the build; the shard task sums over multiple chunk rows).
-
-    ``spec_in`` describes how to extract probe hashes from ``df`` (same modes
-    as the build spec). Returns (shard, n_probed, n_contained).
-    """
+def _rows(keys: list, shards: list, n_fps: list, payloads: list):
+    """Filter-table rows (SHARDED_SCHEMA) as an Arrow table."""
     import pyarrow as pa
 
-    k = shard_bits_for(n_shards)
-    qbits, rbits, fs = _fp_meta(spec)
-
-    probe_chunks = _emit_chunk_rows(df, spec_in, n_shards, fs, max_buffer,
-                                    with_samples=False)
-
-    def probe_group(key, probes_tbl: "pa.Table", filt_tbl: "pa.Table") -> "pa.Table":
-        if probes_tbl.num_rows == 0:
-            return pa.table({"shard": pa.array([], pa.int32()),
-                             "n_probed": pa.array([], pa.int64()),
-                             "n_contained": pa.array([], pa.int64())})
-        shard = key[0].as_py()
-        qs = [_unpack_chunk(p.as_py(), shard, fs - k)
-              for p in probes_tbl.column("payload")]
-        n, hit = _probe_chunks_against(filt_tbl, qs, fs, k)
-        return pa.table({"shard": pa.array([shard], pa.int32()),
-                         "n_probed": pa.array([n], pa.int64()),
-                         "n_contained": pa.array([hit], pa.int64())})
-
-    return (probe_chunks.groupBy("shard")
-            .cogroup(filter_df.groupBy("shard"))
-            .applyInArrow(probe_group, "shard int, n_probed long, n_contained long"))
+    return pa.table({"key": pa.array(keys, pa.int32()),
+                     "shard": pa.array(shards, pa.int32()),
+                     "n_fps": pa.array(n_fps, pa.int64()),
+                     "payload": pa.array(payloads, pa.binary())})
 
 
-def insert_sharded(filter_df, new_df, spec_in: SketchSpec, n_shards: int,
-                   spec: SketchSpec):
-    """Incremental insert into an EXISTING sharded filter table.
-
-    The daily-ingest operation: new rows are extracted with the same kernel
-    as the build, shuffled as sorted per-(task, shard) chunks, and merged
-    into each shard's blob via a co-partitioned group join — identical
-    plan shape to the build's merge round, so the result is bit-equal to
-    rebuilding from the union of old and new data (canonical-form merge).
-    Shards absent from the table are created (a new prefix range appearing
-    in fresh data). A hot shard grows its local qbits exactly like the
-    build does.
-    """
-    import pandas as pd
-    import pyarrow as pa
-    from pyspark.sql import functions as F
-
-    k = shard_bits_for(n_shards)
-    qbits, rbits, fs = _fp_meta(spec)
-    keep = getattr(spec.make(), "keep_duplicates", True)
-
-    chunks = _emit_chunk_rows(new_df, spec_in, n_shards, fs,
-                              max_buffer=16_000_000, with_samples=False)
-
-    # old blobs hold SHARD-LOCAL fingerprints while new chunks arrive in
-    # global coordinates: lift old to global, merge, re-encode shard-local
-    def merge_in(key, new_tbl: "pa.Table", filt_tbl: "pa.Table") -> "pa.Table":
-        shard = int(key[0].as_py())
-        base = np.uint64(shard) << np.uint64(fs - k)
-        runs = [_unpack_chunk(p.as_py(), shard, fs - k)
-                for p in new_tbl.column("payload")]
-        if filt_tbl.num_rows:
-            old = sketches.loads(filt_tbl.column("payload")[0].as_py())
-            runs.append(old.filter.fingerprints() + base)
-        fps = np.concatenate(runs) if runs else np.empty(0, dtype=np.uint64)
-        fps.sort(kind="stable")
-        if not keep:
-            fps = np.unique(fps)
-        blob = _shard_blob(fps, shard, qbits - k, rbits, keep)
-        return pa.table({"shard": pa.array([shard], pa.int32()),
-                         "n_fps": pa.array([int(fps.size)], pa.int64()),
-                         "payload": pa.array([blob], pa.binary())})
-
-    return (chunks.groupBy("shard")
-            .cogroup(filter_df.groupBy("shard"))
-            .applyInArrow(merge_in, SHARDED_SCHEMA))
-
-
-def remove_sharded(filter_df, removals_df, hash_col: str, n_shards: int,
-                   spec: SketchSpec):
-    """Distributed remove: retractions shuffle to their fingerprint shard.
-
-    Each shard applies the batch locally (one occurrence removed per request
-    when present — reference remove semantics, src/lib.rs:1072-1129, with the
-    same collision caveat). Returns the new filter DataFrame; removals of
-    absent fingerprints are ignored (count clamped at zero), implementing
-    the "counting merge with signed multiplicities" plan from SURVEY.md §2.1
-    row 10.
-    """
-    import pyarrow as pa
-    from pyspark.sql import functions as F
-
-    k = shard_bits_for(n_shards)
-    qbits, rbits, fs = _fp_meta(spec)
-    keep = getattr(spec.make(), "keep_duplicates", True)
-
-    removals = _route_by_shard(removals_df, hash_col, fs, k)
-
-    def apply_removals(key, rem_tbl: "pa.Table", filt_tbl: "pa.Table") -> "pa.Table":
-        # extract BEFORE the empty-shard shortcut (NULL removal hashes land
-        # on the NULL shard, which never has a filter chunk — they must be
-        # refused, not silently dropped)
-        h = (_u64_from_arrow(rem_tbl.column("h"), "remove_sharded")
-             if rem_tbl.num_rows else None)
-        if filt_tbl.num_rows == 0:
-            return pa.table({"shard": pa.array([], pa.int32()),
-                             "n_fps": pa.array([], pa.int64()),
-                             "payload": pa.array([], pa.binary())})
-        sk = sketches.loads(filt_tbl.column("payload")[0].as_py())
-        if h is not None:
-            sk.filter.remove_hashes(h & _local_mask(fs, k))
-        blob = sketches.RsqfSketch(
-            Filter(sk.filter.qbits, sk.filter.rbits, None,
-                   sk.filter.fingerprints()), keep).to_blocks_bytes()
-        return pa.table({"shard": pa.array([key[0].as_py()], pa.int32()),
-                         "n_fps": pa.array([len(sk.filter)], pa.int64()),
-                         "payload": pa.array([blob], pa.binary())})
-
-    return (removals.groupBy("shard")
-            .cogroup(filter_df.groupBy("shard"))
-            .applyInArrow(apply_removals, SHARDED_SCHEMA))
-
-
-# ---------------------------------------------------------------------------
-# hot-shard splitting: bounded per-task state under fingerprint-prefix skew
-# ---------------------------------------------------------------------------
-#
 # A shard whose fingerprint range is hit disproportionately (biased upstream
 # hashes, adversarial prefixes) would concentrate one task's memory. The fix
 # is a RangePartitioner-style split: chunk rows already carry SORTED
-# fingerprint runs, so each chunk also ships a 1/4096 systematic sample;
+# fingerprint runs, so each chunk also ships a bounded systematic sample;
 # oversized shards get quantile split points planned from the pooled samples
 # (driver-side metadata only — a few KB), and every consumer routes by
-# directory index instead of shard id. Sub-rows keep SHARD-local fingerprint
-# coordinates, so the canonical form and the blob codec are untouched — the
-# split is pure metadata, and the union of sub-rows is bit-equal to the
-# unsplit shard. Limitation: a multiset piled onto ONE fingerprint value
-# cannot be range-split (its copies stay in one row); distinct-key skew is
-# fully handled.
+# directory index. Rows keep SHARD-local fingerprint coordinates, so the
+# canonical form and the blob codec are untouched — the split is pure
+# metadata, and the union of a shard's rows is bit-equal to the unsplit
+# shard. Limitation: a multiset piled onto ONE fingerprint value cannot be
+# range-split (its copies stay in one row); distinct-key skew is fully
+# handled.
 
-SPLIT_SCHEMA = "key int, shard int, n_fps long, payload binary"
 _SPLIT_PREFIX = "qfs_split_"
 _SAMPLES_PER_CHUNK = 64  # bounded per (task, shard) row => driver metadata
                          # stays KB-scale at ANY corpus size (RangePartitioner
@@ -427,11 +134,12 @@ _SAMPLES_PER_CHUNK = 64  # bounded per (task, shard) row => driver metadata
 
 
 class ShardDirectory:
-    """Routing metadata for a (possibly split) sharded filter.
+    """Routing metadata for a sharded filter table.
 
     ``starts`` is the ascending array of global-fingerprint range starts,
-    one per table row; row ``i`` owns [starts[i], starts[i+1]). Entry i's
-    shard id is ``shards[i]`` (= starts[i] >> (fs-k)).
+    one per table row; row ``i`` (``key == i``) owns [starts[i],
+    starts[i+1]). Entry i's shard id is ``shards[i]`` (= starts[i] >>
+    (fs-k)). :meth:`uniform` is the identity directory.
     """
 
     def __init__(self, starts: np.ndarray, fs: int, k: int):
@@ -444,15 +152,30 @@ class ShardDirectory:
                        if fs - k < 64
                        else np.zeros(self.starts.size, dtype=np.int64))
 
-    def route(self, fps: np.ndarray) -> np.ndarray:
-        """Row key (directory index) for each global fingerprint."""
-        return (np.searchsorted(self.starts, fps, side="right") - 1).astype(np.int64)
+    @classmethod
+    def uniform(cls, spec: SketchSpec, n_shards: int) -> "ShardDirectory":
+        """The identity directory: one row per shard, ``key == shard``."""
+        k = shard_bits_for(n_shards)
+        qbits, _, fs = _fp_meta(spec)
+        if k > qbits:
+            raise ValueError(
+                f"a {k}-bit shard prefix (n_shards={n_shards}) does not fit "
+                f"in the filter's {qbits}-bit quotient")
+        return cls(np.array([s << (fs - k) for s in range(n_shards)],
+                            dtype=np.uint64), fs, k)
 
     def split_sorted(self, fps: np.ndarray) -> list[tuple[int, np.ndarray]]:
         """Split an ASCENDING fingerprint array at row boundaries."""
         bounds = np.searchsorted(fps, self.starts[1:], side="left")
         chunks = np.split(fps, bounds)
         return [(i, c) for i, c in enumerate(chunks) if c.size]
+
+    def runs(self, key, tbl) -> tuple[int, int, list[np.ndarray]]:
+        """(key, shard, global fingerprint runs) of a group's chunk rows."""
+        key = key[0].as_py()
+        shard = int(self.shards[key])
+        return key, shard, [_unpack_chunk(p, shard, self.fs - self.k)
+                            for p in tbl.column("payload").to_pylist()]
 
 
 def plan_directory(sizes_samples: list, n_shards: int, fs: int,
@@ -493,41 +216,42 @@ def plan_directory(sizes_samples: list, n_shards: int, fs: int,
     return ShardDirectory(np.array(sorted(set(starts)), dtype=np.uint64), fs, k)
 
 
-def _emit_chunk_rows(df, spec_like: SketchSpec, n_shards: int, fs: int,
-                     max_buffer: int, with_samples: bool):
-    """mapInArrow pass: per-(task, shard) sorted fingerprint chunk rows,
-    optionally with a 1/4096 systematic sample column for split planning."""
+def _chunk_batches(directory: ShardDirectory, parts: list,
+                   with_samples: bool = False) -> list:
+    """(key, shard, n_fps, payload[, sample]) record batches of the sorted
+    (key, global fingerprints) ``parts``, each packed shard-relative."""
     import pyarrow as pa
 
-    k = shard_bits_for(n_shards)
-    shift = np.uint64(fs - k)
-    mask = np.uint64((1 << fs) - 1) if fs < 64 else np.uint64(0xFFFFFFFFFFFFFFFF)
+    shards = [int(directory.shards[key]) for key, _ in parts]
+    rows = _rows([key for key, _ in parts], shards,
+                 [int(c.size) for _, c in parts],
+                 [_pack_chunk(c, s, directory.fs - directory.k)
+                  for (_, c), s in zip(parts, shards)])
+    if with_samples:
+        rows = rows.append_column("sample", pa.array(
+            [c[::max(1, c.size // _SAMPLES_PER_CHUNK)].tobytes()
+             for _, c in parts], pa.binary()))
+    return rows.to_batches()
+
+
+def _emit_chunks(df, spec_like: SketchSpec, directory: ShardDirectory,
+                 max_buffer: int, with_samples: bool = False):
+    """mapInArrow pass: per-(task, row) sorted fingerprint chunk rows cut at
+    the directory boundaries, optionally with a bounded systematic sample
+    column for split planning. A task's buffer flushes every ``max_buffer``
+    fingerprints, so per-task state stays bounded; consumers treat the
+    extra chunk rows as extra sorted runs of the same row."""
+    mask = np.uint64((1 << directory.fs) - 1)
     schema = SHARDED_SCHEMA + (", sample binary" if with_samples else "")
 
-    def flush(buf: list) -> "pa.RecordBatch":
+    def flush(buf: list):
         fps = np.concatenate(buf)
         # default introsort: the buffer is fresh UNSORTED hashes (unlike the
         # merge paths, which concatenate sorted runs and want timsort) and
         # this numpy's stable u64 sort is ~7x slower on random input
         fps.sort()
-        bounds = np.searchsorted(
-            fps, np.arange(1, n_shards, dtype=np.uint64) << shift, side="left")
-        chunks = np.split(fps, bounds)
-        shards = [s for s in range(n_shards) if chunks[s].size]
-        cols = [
-            pa.array(shards, pa.int32()),
-            pa.array([int(chunks[s].size) for s in shards], pa.int64()),
-            pa.array([_pack_chunk(chunks[s], s, fs - k) for s in shards],
-                     pa.binary()),
-        ]
-        names = ["shard", "n_fps", "payload"]
-        if with_samples:
-            cols.append(pa.array(
-                [chunks[s][::max(1, chunks[s].size // _SAMPLES_PER_CHUNK)]
-                 .tobytes() for s in shards],
-                pa.binary()))
-            names.append("sample")
-        return pa.record_batch(cols, names=names)
+        return _chunk_batches(directory, directory.split_sorted(fps),
+                              with_samples)
 
     def emit(batches):
         buf: list[np.ndarray] = []
@@ -539,12 +263,185 @@ def _emit_chunk_rows(df, spec_like: SketchSpec, n_shards: int, fs: int,
                     buf.append(np.asarray(data, dtype=np.uint64) & mask)
                     buffered += data.size
             if buffered >= max_buffer:
-                yield flush(buf)
+                yield from flush(buf)
                 buf, buffered = [], 0
         if buf:
-            yield flush(buf)
+            yield from flush(buf)
 
     return df.select(spec_like.col).mapInArrow(emit, schema)
+
+
+def _merge(chunks_df, directory: ShardDirectory, spec: SketchSpec,
+           filter_df=None):
+    """Merge each row's sorted chunk runs (plus, with ``filter_df``, the
+    row's existing blob) into its shard-local blob, keyed by ``key``."""
+    qbits, rbits, fs = _fp_meta(spec)
+    k = directory.k
+    keep = getattr(spec.make(), "keep_duplicates", True)
+
+    def merge(key, new_tbl, filt_tbl):
+        key, shard, runs = directory.runs(key, new_tbl)
+        if filt_tbl.num_rows:
+            # old blobs hold SHARD-LOCAL fingerprints while new chunks
+            # arrive in global coordinates: lift old to global
+            old = sketches.loads(filt_tbl.column("payload")[0].as_py())
+            runs.append(old.filter.fingerprints()
+                        + (np.uint64(shard) << np.uint64(fs - k)))
+        fps = np.concatenate(runs) if runs else np.empty(0, dtype=np.uint64)
+        fps.sort(kind="stable")  # timsort: adaptive on concatenated sorted runs
+        if not keep:
+            fps = np.unique(fps)
+        blob = _shard_blob(fps, shard, qbits - k, rbits, keep)
+        return _rows([key], [shard], [int(fps.size)], [blob])
+
+    grouped = chunks_df.groupBy("key")
+    if filter_df is None:
+        return grouped.applyInArrow(
+            lambda key, tbl: merge(key, tbl, tbl.slice(0, 0)), SHARDED_SCHEMA)
+    return (grouped.cogroup(filter_df.groupBy("key"))
+            .applyInArrow(merge, SHARDED_SCHEMA))
+
+
+def build_sharded_filter(df, spec: SketchSpec, n_shards: int = 64,
+                         max_buffer: int = 16_000_000):
+    """Returns a DataFrame (key, shard, n_fps, payload): the distributed
+    filter under the identity directory (``key == shard``).
+
+    ``payload`` is a canonical sorted-fingerprint Filter blob restricted to
+    the shard's fingerprint range [shard << (fs-k), (shard+1) << (fs-k)).
+    Write it to Parquet to persist; union of shards == the single filter.
+
+    Spill-aware: a task's fingerprint buffer is capped at ``max_buffer``
+    entries (~128 MB); larger input partitions emit multiple sorted chunk
+    waves, which the shard merge treats as extra sorted runs — per-task
+    memory stays bounded no matter the input partition size (SURVEY.md §7
+    "Python-side memory" risk item).
+    """
+    directory = ShardDirectory.uniform(spec, n_shards)
+    return _merge(_emit_chunks(df, spec, directory, max_buffer),
+                  directory, spec)
+
+
+def probe_sharded(probe_df, hash_col: str, filter_df, n_shards: int,
+                  spec: SketchSpec):
+    """Membership/count stats per shard via a co-partitioned group join.
+
+    Returns a DataFrame (shard, n_probed, n_contained) — aggregate per
+    shard; sum for global counts. Probes travel through one shuffle keyed
+    by the same fingerprint-prefix shard function as the build, as sorted
+    chunks of the prehashed ``hash_col`` (NULL hashes are refused).
+    """
+    return probe_sharded_chunks(
+        probe_df, SketchSpec(spec.kind, spec.params, "hash_col", hash_col),
+        filter_df, n_shards, spec)
+
+
+def count_sharded(probe_df, hash_col: str, filter_df, n_shards: int,
+                  spec: SketchSpec):
+    """Per-key COUNT estimates through the uniform sharded layout
+    (reference counting semantics src/lib.rs:1008-1018 applied at table
+    scale). Uniform tables only: probe rows route by shard id, which is the
+    row key only under the identity directory.
+
+    Each probe row routes to its fingerprint-prefix shard — one
+    co-partitioned shuffle of (h, key) rows — and receives the shard-local
+    ``count_hashes`` estimate. Returns (h, est) keyed by the probe hash;
+    join back on ``h`` downstream. Counting multiplicity lives entirely
+    inside one shard (a fingerprint's copies share its prefix), so sharded
+    counts are exactly the single-filter counts.
+    """
+    import pyarrow as pa
+    from pyspark.sql import functions as F
+
+    directory = ShardDirectory.uniform(spec, n_shards)
+    fs, k = directory.fs, directory.k
+    # JVM-side prefix router. Guards the JVM's shift-mod-64: at k=0 with a
+    # 64-bit fingerprint, ``h >>> 64`` would return h, not 0.
+    route = (F.lit(0) if fs - k >= 64 else F.shiftrightunsigned(
+        F.col(hash_col).bitwiseAND(F.lit((1 << fs) - 1 if fs < 64 else -1)),
+        fs - k))
+    probes = probe_df.select(F.col(hash_col).alias("h"),
+                             route.cast("int").alias("key"))
+
+    def count_group(key, probes_tbl, filt_tbl):
+        n = probes_tbl.num_rows
+        if n == 0:
+            return pa.table({"h": pa.array([], pa.int64()),
+                             "est": pa.array([], pa.int64())})
+        # extract BEFORE the empty-shard shortcut: a NULL hash routes to the
+        # NULL key, whose filter side is always empty — refuse, not count 0
+        h_u64 = u64_hashes_from_arrow(probes_tbl.column("h"), "count_sharded")
+        h_raw = h_u64.view(np.int64)
+        if filt_tbl.num_rows == 0:
+            est = np.zeros(n, dtype=np.int64)
+        else:
+            sk = sketches.loads(filt_tbl.column("payload")[0].as_py())
+            est = np.asarray(
+                sk.count_hashes(h_u64 & _local_mask(fs, k)),
+                dtype=np.int64)
+        return pa.table({"h": pa.array(h_raw, pa.int64()),
+                         "est": pa.array(est, pa.int64())})
+
+    return (probes.groupBy("key")
+            .cogroup(filter_df.groupBy("key"))
+            .applyInArrow(count_group, "h long, est long"))
+
+
+def probe_sharded_chunks(df, spec_in: SketchSpec, filter_df, n_shards: int,
+                         spec: SketchSpec, max_buffer: int = 16_000_000):
+    """Like :func:`probe_sharded` but shuffles sorted per-shard hash CHUNKS
+    instead of individual probe rows.
+
+    The probe side runs the same extract kernel as the build, sorts its
+    partition's hashes once, splits them at the shard boundaries, and ships
+    one binary blob per (partition, shard) — a few thousand rows of vector
+    payloads instead of billions of scalar rows. Each shard task then probes
+    sorted-queries-against-sorted-table, the cache-optimal case. At 100 TB
+    this turns the probe shuffle from O(rows) record overhead into O(bytes).
+    Per-task probe buffers flush every ``max_buffer`` hashes (same bounded
+    discipline as the build; the shard task sums over multiple chunk rows).
+
+    ``spec_in`` describes how to extract probe hashes from ``df`` (same modes
+    as the build spec). Returns (shard, n_probed, n_contained).
+    """
+    return probe_sharded_split(
+        df, spec_in, filter_df, ShardDirectory.uniform(spec, n_shards), spec,
+        max_buffer).withColumnRenamed("key", "shard")
+
+
+def insert_sharded(filter_df, new_df, spec_in: SketchSpec, n_shards: int,
+                   spec: SketchSpec):
+    """Incremental insert into an EXISTING sharded filter table.
+
+    The daily-ingest operation: new rows are extracted with the same kernel
+    as the build, shuffled as sorted per-(task, shard) chunks, and merged
+    into each shard's blob via a co-partitioned group join — identical
+    plan shape to the build's merge round, so the result is bit-equal to
+    rebuilding from the union of old and new data (canonical-form merge).
+    Shards absent from the table are created (a new prefix range appearing
+    in fresh data). A hot shard grows its local qbits exactly like the
+    build does.
+    """
+    directory = ShardDirectory.uniform(spec, n_shards)
+    return _merge(_emit_chunks(new_df, spec_in, directory, 16_000_000),
+                  directory, spec, filter_df)
+
+
+def remove_sharded(filter_df, removals_df, hash_col: str, n_shards: int,
+                   spec: SketchSpec):
+    """Distributed remove: retractions shuffle to their fingerprint shard.
+
+    Each shard applies the batch locally (one occurrence removed per request
+    when present — reference remove semantics, src/lib.rs:1072-1129, with the
+    same collision caveat). Returns the new filter DataFrame; removals of
+    absent fingerprints are ignored (count clamped at zero), implementing
+    the "counting merge with signed multiplicities" plan from SURVEY.md §2.1
+    row 10. NULL removal hashes are refused.
+    """
+    return remove_sharded_split(
+        filter_df, removals_df,
+        SketchSpec(spec.kind, spec.params, "hash_col", hash_col),
+        ShardDirectory.uniform(spec, n_shards), spec)
 
 
 def build_sharded_filter_split(df, spec: SketchSpec, n_shards: int = 64,
@@ -568,59 +465,34 @@ def build_sharded_filter_split(df, spec: SketchSpec, n_shards: int = 64,
     release). Call :func:`retire_split_filter` on the returned DataFrame
     to delete the directory when the filter is retired.
     """
-    import os
     import uuid
 
-    import pandas as pd
     from pyspark import StorageLevel
 
-    k = shard_bits_for(n_shards)
-    qbits, rbits, fs = _fp_meta(spec)
-    assert k <= qbits
-    keep = getattr(spec.make(), "keep_duplicates", True)
+    uniform = ShardDirectory.uniform(spec, n_shards)
+    range_bits = uniform.fs - uniform.k
 
-    chunks_df = _emit_chunk_rows(df, spec, n_shards, fs, max_buffer,
-                                 with_samples=True) \
+    chunks_df = _emit_chunks(df, spec, uniform, max_buffer,
+                             with_samples=True) \
         .persist(StorageLevel.MEMORY_AND_DISK)
     meta = chunks_df.select("shard", "n_fps", "sample").collect()
     directory = plan_directory(
         [(r["shard"], r["n_fps"], r["sample"]) for r in meta],
-        n_shards, fs, max_fps_per_row)
-
-    import pyarrow as pa
+        n_shards, uniform.fs, max_fps_per_row)
 
     def resplit(batches):
+        # a shard's chunk re-cut at the planned boundaries: every part
+        # stays inside that shard's rows
         for batch in batches:
-            shards = batch.column("shard").to_numpy(zero_copy_only=False)
-            payloads = batch.column("payload")
-            out_key, out_shard, out_n, out_pay = [], [], [], []
-            for i in range(batch.num_rows):
-                shard = int(shards[i])
-                fps = _unpack_chunk(payloads[i].as_py(), shard, fs - k)
-                for key, part in directory.split_sorted(fps):
-                    if directory.shards[key] != shard:
-                        continue  # empty boundary slices of other shards
-                    out_key.append(key)
-                    out_shard.append(shard)
-                    out_n.append(int(part.size))
-                    out_pay.append(_pack_chunk(part, shard, fs - k))
-            yield pa.record_batch(
-                [pa.array(out_key, pa.int32()), pa.array(out_shard, pa.int32()),
-                 pa.array(out_n, pa.int64()), pa.array(out_pay, pa.binary())],
-                names=["key", "shard", "n_fps", "payload"])
+            parts = []
+            for shard, p in zip(batch.column("shard").to_pylist(),
+                                batch.column("payload").to_pylist()):
+                parts.extend(directory.split_sorted(
+                    _unpack_chunk(p, shard, range_bits)))
+            yield from _chunk_batches(directory, parts)
 
-    keyed = chunks_df.mapInArrow(resplit, SPLIT_SCHEMA)
-
-    def merge_row(key, pdf: "pd.DataFrame") -> "pd.DataFrame":
-        shard = int(pdf["shard"].iloc[0])
-        runs = [_unpack_chunk(p, shard, fs - k) for p in pdf["payload"]]
-        fps = np.concatenate(runs) if runs else np.empty(0, dtype=np.uint64)
-        fps.sort(kind="stable")
-        if not keep:
-            fps = np.unique(fps)
-        blob = _shard_blob(fps, shard, qbits - k, rbits, keep)
-        return pd.DataFrame({"key": [int(key[0])], "shard": [shard],
-                             "n_fps": [int(fps.size)], "payload": [blob]})
+    keyed = chunks_df.select("shard", "payload") \
+        .mapInArrow(resplit, SHARDED_SCHEMA)
 
     # materialize the merged table NOW (to its at-rest parquet home) so the
     # corpus-scale chunk cache can be released inside this call (round-2
@@ -637,10 +509,9 @@ def build_sharded_filter_split(df, spec: SketchSpec, n_shards: int = 64,
         from ..fsutil import child
 
         path = child(base, f"{_SPLIT_PREFIX}{app}_{uuid.uuid4().hex[:8]}")
-    keyed.groupBy("key").applyInPandas(merge_row, SPLIT_SCHEMA) \
-        .write.mode("errorifexists").parquet(path)
+    _merge(keyed, directory, spec).write.mode("errorifexists").parquet(path)
     chunks_df.unpersist()
-    out = spark.read.schema(SPLIT_SCHEMA).parquet(path)
+    out = spark.read.schema(SHARDED_SCHEMA).parquet(path)
     out._qfs_split_path = path  # lets retire_split_filter find an empty table
     return out, directory
 
@@ -667,78 +538,39 @@ def retire_split_filter(filter_df) -> None:
     delete(filter_df.sparkSession, path)
 
 
-def _emit_split_chunks(df, spec_in: SketchSpec, directory: "ShardDirectory",
-                       max_buffer: int = 16_000_000):
-    """mapInArrow pass shared by split probe/remove: sorted fingerprint
-    chunks cut at the directory boundaries, flushed every ``max_buffer``
-    fingerprints so per-task state stays bounded (same discipline as
-    ``_emit_chunk_rows``; downstream co-groups already sum/iterate over
-    multiple chunk rows per (task, key))."""
-    import pyarrow as pa
-
-    fs, k = directory.fs, directory.k
-    mask = (np.uint64((1 << fs) - 1) if fs < 64
-            else np.uint64(0xFFFFFFFFFFFFFFFF))
-
-    def flush(buf: list) -> "pa.RecordBatch":
-        fps = np.concatenate(buf)
-        # introsort: fresh unsorted hashes (see _emit_chunk_rows.flush)
-        fps.sort()
-        keys, shards, ns, pays = [], [], [], []
-        for key, part in directory.split_sorted(fps):
-            shard = int(directory.shards[key])
-            keys.append(key)
-            shards.append(shard)
-            ns.append(int(part.size))
-            pays.append(_pack_chunk(part, shard, fs - k))
-        return pa.record_batch(
-            [pa.array(keys, pa.int32()), pa.array(shards, pa.int32()),
-             pa.array(ns, pa.int64()), pa.array(pays, pa.binary())],
-            names=["key", "shard", "n_fps", "payload"])
-
-    def emit(batches):
-        buf: list[np.ndarray] = []
-        buffered = 0
-        for batch in batches:
-            if batch.num_rows:
-                data = spec_in.extract(batch)
-                if data.size:
-                    buf.append(np.asarray(data, dtype=np.uint64) & mask)
-                    buffered += data.size
-            if buffered >= max_buffer:
-                yield flush(buf)
-                buf, buffered = [], 0
-        if buf:
-            yield flush(buf)
-
-    return df.select(spec_in.col).mapInArrow(emit, SPLIT_SCHEMA)
-
-
 def probe_sharded_split(df, spec_in: SketchSpec, filter_df,
                         directory: "ShardDirectory", spec: SketchSpec,
                         max_buffer: int = 16_000_000):
     """Chunked probe against a split filter table: sorted probe chunks are
-    cut at the directory boundaries and co-grouped by row key."""
+    cut at the directory boundaries and co-grouped by row key. Returns
+    (key, n_probed, n_contained)."""
     import pyarrow as pa
 
-    fs, k = directory.fs, directory.k
+    lm = _local_mask(directory.fs, directory.k)
 
-    probe_chunks = _emit_split_chunks(df, spec_in, directory, max_buffer)
-
-    def probe_group(key, probes_tbl: "pa.Table", filt_tbl: "pa.Table") -> "pa.Table":
+    def probe_group(key, probes_tbl, filt_tbl):
         if probes_tbl.num_rows == 0:
             return pa.table({"key": pa.array([], pa.int32()),
                              "n_probed": pa.array([], pa.int64()),
                              "n_contained": pa.array([], pa.int64())})
-        shard = int(probes_tbl.column("shard")[0].as_py())
-        qs = [_unpack_chunk(p.as_py(), shard, fs - k)
-              for p in probes_tbl.column("payload")]
-        n, hit = _probe_chunks_against(filt_tbl, qs, fs, k)
-        return pa.table({"key": pa.array([key[0].as_py()], pa.int32()),
-                         "n_probed": pa.array([n], pa.int64()),
+        key, _, qs = directory.runs(key, probes_tbl)
+        hit = 0
+        if filt_tbl.num_rows:
+            sk = sketches.loads(filt_tbl.column("payload")[0].as_py())
+            table = sk.filter._fps
+            # size guard: a row drained to empty by a remove still exists,
+            # and min(lo, -1) would index into nothing
+            for q in qs if table.size else ():
+                q = q & lm  # shard-local coordinates (stays sorted)
+                lo = np.searchsorted(table, q, side="left")
+                hit += int(((lo < table.size)
+                            & (table[np.minimum(lo, table.size - 1)] == q)).sum())
+        return pa.table({"key": pa.array([key], pa.int32()),
+                         "n_probed": pa.array([sum(q.size for q in qs)],
+                                              pa.int64()),
                          "n_contained": pa.array([hit], pa.int64())})
 
-    return (probe_chunks.groupBy("key")
+    return (_emit_chunks(df, spec_in, directory, max_buffer).groupBy("key")
             .cogroup(filter_df.groupBy("key"))
             .applyInArrow(probe_group, "key int, n_probed long, n_contained long"))
 
@@ -751,56 +583,35 @@ def remove_sharded_split(filter_df, removals_df, spec_in: SketchSpec,
     Retractions are extracted with the same kernel as the build, sorted,
     cut at the directory boundaries, and co-grouped with their row — the
     removal shuffle is O(bytes) chunk rows, and per-task memory stays
-    bounded by the split row sizes. Returns the new filter DataFrame
-    (same SPLIT_SCHEMA; reference remove semantics per row,
-    src/lib.rs:1056-1129).
+    bounded by the split row sizes. A row's removal chunks are applied in
+    one ``remove_hashes`` call (each call is O(row)). Returns the new
+    filter DataFrame (same SHARDED_SCHEMA; reference remove semantics per
+    row, src/lib.rs:1056-1129).
     """
-    import pyarrow as pa
-
-    fs, k = directory.fs, directory.k
+    lm = _local_mask(directory.fs, directory.k)
     keep = getattr(spec.make(), "keep_duplicates", True)
 
-    def apply_removals(key, rem_tbl: "pa.Table", filt_tbl: "pa.Table") -> "pa.Table":
+    def apply_removals(key, rem_tbl, filt_tbl):
         if filt_tbl.num_rows == 0:
-            return pa.table({"key": pa.array([], pa.int32()),
-                             "shard": pa.array([], pa.int32()),
-                             "n_fps": pa.array([], pa.int64()),
-                             "payload": pa.array([], pa.binary())})
-        shard = int(filt_tbl.column("shard")[0].as_py())
+            return _rows([], [], [], [])
+        key, shard, runs = directory.runs(key, rem_tbl)
         sk = sketches.loads(filt_tbl.column("payload")[0].as_py())
-        if rem_tbl.num_rows:
-            lm = _local_mask(fs, k)
-            for p in rem_tbl.column("payload"):
-                h = _unpack_chunk(p.as_py(), shard, fs - k)
-                sk.filter.remove_hashes(h & lm)
+        if runs:
+            sk.filter.remove_hashes(np.concatenate(runs) & lm)
         blob = sketches.RsqfSketch(
             Filter(sk.filter.qbits, sk.filter.rbits, None,
                    sk.filter.fingerprints()), keep).to_blocks_bytes()
-        return pa.table({"key": pa.array([key[0].as_py()], pa.int32()),
-                         "shard": pa.array([shard], pa.int32()),
-                         "n_fps": pa.array([len(sk.filter)], pa.int64()),
-                         "payload": pa.array([blob], pa.binary())})
+        return _rows([key], [shard], [len(sk.filter)], [blob])
 
-    chunks = _emit_split_chunks(removals_df, spec_in, directory, max_buffer)
-    return (chunks.groupBy("key")
+    return (_emit_chunks(removals_df, spec_in, directory, max_buffer)
+            .groupBy("key")
             .cogroup(filter_df.groupBy("key"))
-            .applyInArrow(apply_removals, SPLIT_SCHEMA))
+            .applyInArrow(apply_removals, SHARDED_SCHEMA))
 
 
 def split_to_single(filter_df, spec: SketchSpec, n_shards: int) -> bytes:
     """Collapse a split filter table to one global blob (parity checks)."""
-    k = shard_bits_for(n_shards)
-    qbits, rbits, fs = _fp_meta(spec)
-    keep = getattr(spec.make(), "keep_duplicates", True)
-    rows = sorted(filter_df.collect(), key=lambda r: r["key"])
-    parts = []
-    for r in rows:
-        local = sketches.loads(bytes(r["payload"])).filter.fingerprints()
-        base = np.uint64(int(r["shard"])) << np.uint64(fs - k)
-        parts.append(local + base)
-    fps = (np.concatenate(parts) if parts else np.empty(0, dtype=np.uint64))
-    fps.sort(kind="stable")  # row ranges are disjoint; sort is adaptive
-    return sketches.RsqfSketch(Filter(qbits, rbits, None, fps), keep).to_bytes()
+    return sharded_to_single(filter_df, spec, n_shards)
 
 
 def shrink_sharded(filter_df):
@@ -817,46 +628,33 @@ def shrink_sharded(filter_df):
 
     def shrink_rows(batches):
         for batch in batches:
-            if batch.num_rows == 0:
-                continue
-            cols = {n: [] for n in batch.schema.names}
-            payload_idx = batch.schema.get_field_index("payload")
-            for i in range(batch.num_rows):
-                sk = sketches.loads(batch.column(payload_idx)[i].as_py())
+            blobs = []
+            for payload in batch.column("payload").to_pylist():
+                sk = sketches.loads(payload)
                 while True:
                     q0 = sk.filter.qbits
                     sk.filter.shrink_to_fit()
                     if sk.filter.qbits == q0:
                         break
-                for j, name in enumerate(batch.schema.names):
-                    cols[name].append(sk.to_blocks_bytes() if j == payload_idx
-                                      else batch.column(j)[i].as_py())
-            yield pa.record_batch(
-                [pa.array(cols[f.name],
-                          pa.binary() if f.name == "payload" else f.type)
-                 for f in batch.schema],
-                names=list(batch.schema.names))
+                blobs.append(sk.to_blocks_bytes())
+            i = batch.schema.get_field_index("payload")
+            yield batch.set_column(i, "payload", pa.array(blobs, pa.binary()))
 
-    schema = ", ".join(f"{f.name} {f.dataType.simpleString()}"
-                       for f in filter_df.schema.fields)
-    return filter_df.mapInArrow(shrink_rows, schema)
+    return filter_df.mapInArrow(shrink_rows, filter_df.schema)
 
 
 def sharded_to_single(filter_df, spec: SketchSpec, n_shards: int = 64) -> bytes:
     """Collapse the shard table to one global blob (parity tests / export).
 
-    Shard blobs hold shard-local fingerprints (fs-k bits); adding each
-    shard's base back and concatenating in shard order yields the global
-    sorted multiset (shards are contiguous ranges).
+    Row blobs hold shard-local fingerprints (fs-k bits); adding each row's
+    shard base back and concatenating in key order yields the global
+    sorted multiset (rows are contiguous ascending ranges), split or not.
     """
     k = shard_bits_for(n_shards)
     qbits, rbits, fs = _fp_meta(spec)
-    keep = getattr(spec.make(), "keep_duplicates", True)
-    rows = sorted(filter_df.collect(), key=lambda r: r["shard"])
-    parts = []
-    for r in rows:
-        local = sketches.loads(r["payload"]).filter.fingerprints()
-        base = np.uint64(int(r["shard"])) << np.uint64(fs - k)
-        parts.append(local + base)
+    parts = [sketches.loads(bytes(r["payload"])).filter.fingerprints()
+             + (np.uint64(int(r["shard"])) << np.uint64(fs - k))
+             for r in sorted(filter_df.collect(), key=lambda r: r["key"])]
     fps = (np.concatenate(parts) if parts else np.empty(0, dtype=np.uint64))
+    keep = getattr(spec.make(), "keep_duplicates", True)
     return sketches.RsqfSketch(Filter(qbits, rbits, None, fps), keep).to_bytes()

@@ -76,13 +76,3 @@ def write_corpus(df, location: str, mode: str = "overwrite"):
         return (df.writeTo(location).partitionedBy("source")
                 .using("iceberg").createOrReplace())
     return df.write.mode(mode).partitionBy("source").parquet(location)
-
-
-def write_filter_table(filter_df, location: str, mode: str = "overwrite"):
-    """Persist a sharded filter table (shard, n_fps, payload)."""
-    return filter_df.write.mode(mode).parquet(location)
-
-
-def read_filter_table(spark, location: str):
-    from .dist.sharded import SHARDED_SCHEMA
-    return spark.read.schema(SHARDED_SCHEMA).parquet(location)

@@ -393,17 +393,16 @@ def q_rsqf_fingerprint_size(spark, sf_dir):
              pa.array([per[w].to_bytes() for w in widths], pa.binary())],
             names=["w", "payload"])
 
-    import pandas as pd
-
-    def merge_width(key, pdf: "pd.DataFrame") -> "pd.DataFrame":
+    def merge_width(key, tbl):
         acc = None
-        for payload in pdf["payload"]:
-            sk = sketches.loads(bytes(payload))
+        for payload in tbl.column("payload").to_pylist():
+            sk = sketches.loads(payload)
             acc = sk if acc is None else (acc.merge(sk) or acc)
-        return pd.DataFrame({"w": [int(key[0])], "payload": [acc.to_bytes()]})
+        return pa.table({"w": pa.array([key[0].as_py()], pa.int32()),
+                         "payload": pa.array([acc.to_bytes()], pa.binary())})
 
     merged = (base.mapInArrow(build_all, "w int, payload binary")
-              .groupBy("w").applyInPandas(merge_width, "w int, payload binary")
+              .groupBy("w").applyInArrow(merge_width, "w int, payload binary")
               .collect())
     rows = []
     for r in sorted(merged, key=lambda r: r["w"]):
